@@ -1,6 +1,7 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths, StandardCopyOption}
+import Meters.{codegenCompiles, flushListenerBus, gcPauseMs, hostSnapshot, r3, stealJiffies}
 
 /** Benchmark main: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR, timing FULL materialization (noop datasource
@@ -75,25 +76,6 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
 
-    def stealJiffies(): Long =
-      try {
-        val src = scala.io.Source.fromFile("/proc/stat")
-        try {
-          val f = src.getLines().next().trim.split("\\s+")
-          if (f.length > 8) f(8).toLong else -1L
-        } finally src.close()
-      } catch { case _: Throwable => -1L }
-
-    // Real GC pause time: the JVM's own collector-time counter. In
-    // local[32] there is exactly one JVM, so deltas of this counter
-    // ARE the wall-clock milliseconds the collectors ran — no
-    // task-level multi-counting.
-    def gcPauseMs(): Long = {
-      import scala.jdk.CollectionConverters._
-      java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-        .asScala.map(_.getCollectionTime).sum
-    }
-
     // Pre-run steal sample BEFORE the session spins up (an idle JVM —
     // any steal observed here is the host's, not ours). Records both
     // the window and the delta so the reader can rate-compare runs.
@@ -115,11 +97,7 @@ object Bench {
 
     // ---- per-query GC attribution: one listener accumulating task
     // jvmGCTime; snapshot deltas around each query. The listener bus
-    // is async, so the post-query snapshot flushes it first (via the
-    // bytecode-public LiveListenerBus.waitUntilEmpty — private[spark]
-    // in source, hence reflection; best-effort: on any failure the
-    // delta still lands, attributed to whichever query the late
-    // events trail into).
+    // is async, so the post-query snapshot flushes it first.
     val gcAccum = new java.util.concurrent.atomic.AtomicLong(0L)
     spark.sparkContext.addSparkListener(
       new org.apache.spark.scheduler.SparkListener {
@@ -129,27 +107,6 @@ object Bench {
           if (m != null) { gcAccum.addAndGet(m.jvmGCTime); () }
         }
       })
-    val flushListenerBus: () => Unit =
-      try {
-        val busM = spark.sparkContext.getClass.getMethod("listenerBus")
-        val bus = busM.invoke(spark.sparkContext)
-        val waitM = bus.getClass.getMethod("waitUntilEmpty")
-        () => { try { waitM.invoke(bus); () } catch { case _: Throwable => () } }
-      } catch { case _: Throwable => () => () }
-
-    // Janino compilation counter (Spark's global CodegenMetrics — the
-    // object is private[spark], so reflection again; -1 everywhere if
-    // the internals moved, never a crash)
-    val codegenCount: () => Long =
-      try {
-        val cls = Class.forName(
-          "org.apache.spark.metrics.source.CodegenMetrics$")
-        val mod = cls.getField("MODULE$").get(null)
-        val hist = cls.getMethod("METRIC_COMPILATION_TIME").invoke(mod)
-          .asInstanceOf[com.codahale.metrics.Histogram]
-        () => hist.getCount
-      } catch { case _: Throwable => () => -1L }
-
     // Warmup: run the flagship once untimed so JVM/codegen/session setup
     // is not attributed to the first timed query (r2's q01 showed 17 s of
     // suite warmup vs ~3 s steady-state).
@@ -166,32 +123,9 @@ object Bench {
     // Host-load attribution (r9 verdict item 4: the driver read +31%
     // over the builder's recorded total, uniformly — environment, not
     // regression, but unprovable without data). One snapshot before
-    // each pass and one after the last: 1-min loadavg, cumulative cpu
-    // steal jiffies from /proc/stat (deltas between snapshots = steal
-    // during the pass), and the number of live JVMs (concurrent
-    // harnesses are the usual contention source on a shared host).
-    def hostSnapshot(): String = {
-      val load = java.lang.management.ManagementFactory
-        .getOperatingSystemMXBean.getSystemLoadAverage
-      val steal = stealJiffies()
-      // FOREIGN JVMs only (VERDICT r11 nit: the old count included the
-      // bench's own sbt parent, so a demonstrably quiet host read
-      // jvms=2 and needed prose attribution) — exclude this process,
-      // its ancestors (the sbt/launcher chain), and its descendants,
-      // so a clean run reads foreign_jvms=0 machine-checkably.
-      val own = scala.collection.mutable.Set.empty[Long]
-      var cur: java.util.Optional[ProcessHandle] =
-        java.util.Optional.of(ProcessHandle.current())
-      while (cur.isPresent) { own += cur.get.pid(); cur = cur.get.parent() }
-      ProcessHandle.current().descendants().forEach(p => own += p.pid())
-      val jvms = ProcessHandle.allProcesses()
-        .filter(p => p.info().command()
-          .map[java.lang.Boolean](_.contains("java")).orElse(false))
-        .filter(p => !own.contains(p.pid()))
-        .count()
-      val l = "%.2f".formatLocal(java.util.Locale.ROOT, load)
-      s"""{"loadavg":$l,"steal_jiffies":$steal,"foreign_jvms":$jvms}"""
-    }
+    // each pass and one after the last (Meters.hostSnapshot): deltas
+    // of its steal jiffies between snapshots = steal during the pass,
+    // and foreign JVMs are the usual contention source on a shared host.
     val hostSnaps = scala.collection.mutable.ArrayBuffer.empty[String]
     // VERDICT r11 item 3: q144's full-exact corpus² side is the
     // GATE-SCALE recall audit; q206 (sampled probes) is the
@@ -232,26 +166,24 @@ object Bench {
     def runPass(): Unit =
       order.foreach { name =>
         val fn = selected(name)
-        flushListenerBus()
-        val gc0 = gcAccum.get(); val cg0 = codegenCount()
+        flushListenerBus(spark.sparkContext)
+        val gc0 = gcAccum.get(); val cg0 = codegenCompiles()
         val gp0 = gcPauseMs(); val st0 = stealJiffies()
-        val t0 = System.nanoTime()
-        var ok = true
-        try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] $name failed: ${e.getMessage}")
-          failCounts += name -> (failCounts(name) + 1)
-          ok = false
+        val (ok, elapsed) = Meters.time {
+          try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
+          catch { case e: Throwable =>
+            System.err.println(s"[bench] $name failed: ${e.getMessage}")
+            failCounts += name -> (failCounts(name) + 1)
+            false
+          }
         }
-        val elapsed = (System.nanoTime() - t0) / 1e9
-        flushListenerBus()
+        flushListenerBus(spark.sparkContext)
         buf(passTimes, name) += (if (ok) elapsed else -1.0)
         buf(passGc, name) += gcAccum.get() - gc0
         buf(passGcPause, name) += gcPauseMs() - gp0
         val st1 = stealJiffies()
         buf(passSteal, name) += (if (st0 < 0 || st1 < 0) -1L else st1 - st0)
-        val cg1 = codegenCount()
-        buf(passCodegen, name) += (if (cg0 < 0 || cg1 < 0) -1L else cg1 - cg0)
+        buf(passCodegen, name) += codegenCompiles() - cg0
         // drop this query's persisted tables so later queries aren't
         // timed under the accumulated heap pressure of the whole suite
         // (observed 4x run-to-run swings on the dedup self-joins without)
@@ -314,7 +246,6 @@ object Bench {
     // the one-line JSON past the driver's captured log tail
     // (BENCH_r07.json came back parsed:null) — ms precision is already
     // below host noise, so nothing is lost
-    def r3(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
     val qs = results.map { case (k, v) => "\"" + k + "\":" + r3(v) }
       .mkString("{", ",", "}")
     val detail = order.map { name =>

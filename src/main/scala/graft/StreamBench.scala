@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
@@ -34,6 +35,13 @@ import graft.streaming.StreamingOps
   * whole query (setup + all batches + final commit).
   */
 object StreamBench {
+  /** What one drain reports: input rows, wall seconds, non-empty
+    * micro-batches, peak state-store rows, output rows.
+    */
+  private final case class Drain(inputRows: Long, secs: Double,
+                                 batches: Int, stateRows: Long,
+                                 outRows: Long)
+
   private val ProviderConf = "spark.sql.streaming.stateStore.providerClass"
   private val ChangelogConf =
     "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
@@ -71,66 +79,70 @@ object StreamBench {
       StructField("side", StringType), StructField("otype", StringType),
       StructField("qty", LongType), StructField("premium", DoubleType)))
 
-    /** One full pipeline run under the session's CURRENT state-store
-      * provider, against a fresh sink + checkpoint. Returns
-      * (inputRows, secs, batches, outWindows).
+    /** One timed drain of `topic` (2 files per trigger: 16 files → 8
+      * micro-batches) through `build` into a fresh sink + checkpoint,
+      * under the session's CURRENT state-store provider. Asserts the
+      * provider engaged: RocksDB's state operator exposes rocksdb*
+      * custom metrics the default provider does not. The output count
+      * reads with an explicit schema because a tiny run may finalize
+      * ZERO rows, and inferring the schema of an empty sink throws.
       */
-    def runOnce(tag: String, expectRocksDb: Boolean): (Long, Double, Int, Long) = {
+    def drain(tag: String, expectRocksDb: Boolean, topic: String,
+              schema: String)(build: DataFrame => DataFrame): Drain = {
       val out = s"$dir/out_$tag"; val ckpt = s"$dir/ckpt_$tag"
-      val t0 = System.nanoTime()
-      val raw = spark.readStream
-        .schema("key string, value string, ts timestamp")
-        .option("maxFilesPerTrigger", "2") // 16 files / 2 → 8 micro-batches
-        .parquet(topic)
-        .withColumnRenamed("ts", "kafka_ts")
-      val parsed = Ingest.valid(Ingest.parseJson(raw, "value", valueSchema))
-        .select("ts", "osym", "side", "otype", "qty", "premium")
-      // 10-minute grace: files drain near time-order (range-partitioned
-      // write), so real cross-batch disorder stays far inside the grace
-      val agged = StreamingOps.windowedAgg(parsed, "ts", "osym",
-        "1 minute", "10 minutes",
-        count(lit(1)).as("count") +: OptionAgg.measures())
-      val q = StreamingOps.sink(agged, "parquet", Some(out), ckpt,
-        trigger = Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      val secs = (System.nanoTime() - t0) / 1e9
-
+      val ((q, outSchema), secs) = Meters.time {
+        val outDf = build(spark.readStream.schema(schema)
+          .option("maxFilesPerTrigger", "2").parquet(topic))
+        val q = StreamingOps.sink(outDf, "parquet", Some(out), ckpt,
+          trigger = Trigger.AvailableNow()).start()
+        q.awaitTermination()
+        (q, outDf.schema)
+      }
       val progress = q.recentProgress
-      val inputRows = progress.map(_.numInputRows).sum
-      val batches = progress.count(_.numInputRows > 0)
-      // provider engagement check: RocksDB's state operator exposes
-      // rocksdb* custom metrics the default provider does not
-      val rocksDbMetrics = progress.flatMap(_.stateOperators)
+      val ops = progress.flatMap(_.stateOperators)
+      val rocksDbMetrics = ops
         .flatMap(_.customMetrics.keySet().toArray(Array.empty[String]))
         .exists(_.toLowerCase(java.util.Locale.ROOT).contains("rocksdb"))
       require(rocksDbMetrics == expectRocksDb,
         s"state-store provider mismatch for '$tag': rocksdb metrics " +
           s"present=$rocksDbMetrics, expected=$expectRocksDb")
-      // explicit schema: a tiny run (rows' event time all inside the
-      // watermark grace) finalizes ZERO windows, and a schema-inferring
-      // read of the empty sink dir would throw AFTER the bench succeeded
-      val outWindows = spark.read.schema(agged.schema).parquet(out).count()
-      (inputRows, secs, batches, outWindows)
+      Drain(progress.map(_.numInputRows).sum, secs,
+        progress.count(_.numInputRows > 0),
+        ops.map(_.numRowsTotal).foldLeft(0L)(math.max),
+        spark.read.schema(outSchema).parquet(out).count())
     }
 
-    /** Min-of-2 per provider, matching Bench's convention: whichever
+    /** Min-of-`passes` drains, matching Bench's convention: whichever
       * provider runs second in this JVM would otherwise inherit warmed
       * JIT/codegen/file-cache state from the first and the side-by-side
-      * comparison would be systematically biased toward it. Pass 1 is
-      * the warm-up; the reported rows/s is the better (min-secs) pass,
-      * with both passes' seconds recorded.
+      * comparison would be systematically biased toward it. Returns
+      * the best (min-secs) drain and every pass's seconds.
       */
+    def bestOf(passes: Int)(run: Int => Drain): (Drain, Seq[Double]) = {
+      val runs = (1 to passes).map(run)
+      (runs.minBy(_.secs), runs.map(_.secs))
+    }
+
     def runProvider(tag: String,
                     expectRocksDb: Boolean): (String, Double) = {
-      val p1 = runOnce(s"${tag}_p1", expectRocksDb)
-      val p2 = runOnce(s"${tag}_p2", expectRocksDb)
-      val best = if (p2._2 <= p1._2) p2 else p1
-      val (inputRows, secs, batches, outWindows) = best
-      val rps = inputRows / secs
-      (s""""$tag":{"rows_per_sec":$rps,"secs":$secs,""" +
-        s""""secs_pass1":${p1._2},"secs_pass2":${p2._2},""" +
-        s""""input_rows":$inputRows,"batches":$batches,""" +
-        s""""out_windows":$outWindows,"rocksdb_engaged":$expectRocksDb}""",
+      val (best, secs) = bestOf(2)(i =>
+        drain(s"${tag}_p$i", expectRocksDb, topic,
+            "key string, value string, ts timestamp") { raw =>
+          val parsed = Ingest.valid(Ingest.parseJson(
+              raw.withColumnRenamed("ts", "kafka_ts"), "value", valueSchema))
+            .select("ts", "osym", "side", "otype", "qty", "premium")
+          // 10-minute grace: files drain near time-order (range-
+          // partitioned write), so real cross-batch disorder stays far
+          // inside the grace
+          StreamingOps.windowedAgg(parsed, "ts", "osym",
+            "1 minute", "10 minutes",
+            count(lit(1)).as("count") +: OptionAgg.measures())
+        })
+      val rps = best.inputRows / best.secs
+      (s""""$tag":{"rows_per_sec":$rps,"secs":${best.secs},""" +
+        s""""secs_pass1":${secs(0)},"secs_pass2":${secs(1)},""" +
+        s""""input_rows":${best.inputRows},"batches":${best.batches},""" +
+        s""""out_windows":${best.outRows},"rocksdb_engaged":$expectRocksDb}""",
         rps)
     }
 
@@ -150,7 +162,7 @@ object StreamBench {
     // so each micro-batch folds one huge sorted group AND ~thousands
     // of small ones, per provider, with the same engagement assertion
     // as the e2e run. Reported per (face, provider): rows/s (min-of-2,
-    // the runProvider convention), emitted rows, and the state-store
+    // the bestOf convention), emitted rows, and the state-store
     // row count from the final progress (the per-key O(1) contract:
     // state rows ≈ live keys, never input rows).
     val nf = sys.env.getOrElse("SPARK_GRAFT_STREAM_FACE_ROWS", "200000").toLong
@@ -174,67 +186,6 @@ object StreamBench {
     val faceTopic = s"$dir/face_topic"
     writeFaceTopic(nf, faceTopic)
 
-    def runFaceOnce(face: String, tag: String, expectRocksDb: Boolean,
-                    topic: String, rows: Long): (Long, Double, Long, Long) = {
-      import spark.implicits._
-      val out = s"$dir/fout_$tag"; val ckpt = s"$dir/fckpt_$tag"
-      val t0 = System.nanoTime()
-      val ds = spark.readStream
-        .schema("user bigint, tsUs bigint, eid bigint, etype string")
-        .option("maxFilesPerTrigger", "2")
-        .parquet(topic)
-        .as[graft.streaming.TransEvent]
-      val outDf = face match {
-        case "transitions" => StreamingOps.transitionsStateful(ds).toDF()
-        case "gaps" => StreamingOps.gapsStateful(ds).toDF()
-        case "attribution" =>
-          StreamingOps.attributionStateful(ds, "purchase").toDF()
-        case "entry_exit_timeout" =>
-          StreamingOps.entryExitStatefulTimeout(ds, faceGapUs).toDF()
-        case "dedup_watermark" =>
-          // exactly-once-effect content dedup: every 4 consecutive
-          // events share a content key (integer DIV — `/` on longs is
-          // DOUBLE division and would make every key unique), so the
-          // within-watermark guarantee collapses each quadruple and
-          // out_rows has the exact closed form rows/4, asserted below.
-          // The grace deliberately covers the whole topic span
-          // (rows ms of event time + slack, SCALED with the row knob —
-          // a fixed grace would silently re-break past span > grace):
-          // FileStreamSource's pickup order is not time order (mtime
-          // ties across the range-partitioned files — observed 25%
-          // late-dropped under a 10 s grace, breaking the closed
-          // form), and the face's job is throughput + the
-          // exactly-once closed form; watermark EVICTION mechanics
-          // are pinned by StreamingSpec's dedup spec. State is
-          // key-count-bounded (nf/4), 4x below input.
-          StreamingOps.dedupWithinWatermark(
-            ds.toDF()
-              .withColumn("ts", timestamp_micros(col("tsUs")))
-              .withColumn("ckey", expr("eid DIV 4")),
-            "ts", s"${rows / 1000 + 60} seconds", Seq("ckey"))
-      }
-      val q = StreamingOps.sink(outDf, "parquet", Some(out), ckpt,
-        trigger = Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      val secs = (System.nanoTime() - t0) / 1e9
-      val progress = q.recentProgress
-      val inputRows = progress.map(_.numInputRows).sum
-      val rocksDbMetrics = progress.flatMap(_.stateOperators)
-        .flatMap(_.customMetrics.keySet().toArray(Array.empty[String]))
-        .exists(_.toLowerCase(java.util.Locale.ROOT).contains("rocksdb"))
-      require(rocksDbMetrics == expectRocksDb,
-        s"state-store provider mismatch for '$tag': rocksdb metrics " +
-          s"present=$rocksDbMetrics, expected=$expectRocksDb")
-      val stateRows = progress.flatMap(_.stateOperators)
-        .map(_.numRowsTotal).foldLeft(0L)(math.max)
-      val outRows = spark.read.schema(outDf.schema).parquet(out).count()
-      // the dedup face's correctness gate rides inside the bench: the
-      // closed form holds on any batching (see the face's comment)
-      require(face != "dedup_watermark" || outRows == rows / 4,
-        s"dedup_watermark out_rows=$outRows, expected ${rows / 4}")
-      (inputRows, secs, stateRows, outRows)
-    }
-
     /** passes=2 (the Bench min-of-2 convention) for the base size;
       * the 10x scale point runs ONE pass per provider — at that size a
       * transient can no longer dominate a 40-80 s run, and a second
@@ -244,14 +195,51 @@ object StreamBench {
     def runFaceProvider(face: String, provTag: String,
                         expectRocksDb: Boolean, topic: String, rows: Long,
                         passes: Int): String = {
-      val runs = (1 to passes).map(i =>
-        runFaceOnce(face, s"${face}_${provTag}_r${rows}_p$i", expectRocksDb,
-          topic, rows))
-      val best = runs.minBy(_._2)
-      val (inputRows, secs, stateRows, outRows) = best
-      s""""$provTag":{"rows_per_sec":${inputRows / secs},"secs":$secs,""" +
-        s""""input_rows":$inputRows,"out_rows":$outRows,""" +
-        s""""state_rows":$stateRows,"rocksdb_engaged":$expectRocksDb}"""
+      import spark.implicits._
+      val (best, _) = bestOf(passes) { i =>
+        val d = drain(s"${face}_${provTag}_r${rows}_p$i", expectRocksDb, topic,
+            "user bigint, tsUs bigint, eid bigint, etype string") { raw =>
+          val ds = raw.as[graft.streaming.TransEvent]
+          face match {
+            case "transitions" => StreamingOps.transitionsStateful(ds).toDF()
+            case "gaps" => StreamingOps.gapsStateful(ds).toDF()
+            case "attribution" =>
+              StreamingOps.attributionStateful(ds, "purchase").toDF()
+            case "entry_exit_timeout" =>
+              StreamingOps.entryExitStatefulTimeout(ds, faceGapUs).toDF()
+            case "dedup_watermark" =>
+              // exactly-once-effect content dedup: every 4 consecutive
+              // events share a content key (integer DIV — `/` on longs
+              // is DOUBLE division and would make every key unique), so
+              // the within-watermark guarantee collapses each quadruple
+              // and out_rows has the exact closed form rows/4, asserted
+              // below. The grace deliberately covers the whole topic
+              // span (rows ms of event time + slack, SCALED with the
+              // row knob — a fixed grace would silently re-break past
+              // span > grace): FileStreamSource's pickup order is not
+              // time order (mtime ties across the range-partitioned
+              // files — observed 25% late-dropped under a 10 s grace,
+              // breaking the closed form), and the face's job is
+              // throughput + the exactly-once closed form; watermark
+              // EVICTION mechanics are pinned by StreamingSpec's dedup
+              // spec. State is key-count-bounded (nf/4), 4x below input.
+              StreamingOps.dedupWithinWatermark(
+                ds.toDF()
+                  .withColumn("ts", timestamp_micros(col("tsUs")))
+                  .withColumn("ckey", expr("eid DIV 4")),
+                "ts", s"${rows / 1000 + 60} seconds", Seq("ckey"))
+          }
+        }
+        // the dedup face's correctness gate rides inside the bench: the
+        // closed form holds on any batching (see the face's comment)
+        require(face != "dedup_watermark" || d.outRows == rows / 4,
+          s"dedup_watermark out_rows=${d.outRows}, expected ${rows / 4}")
+        d
+      }
+      s""""$provTag":{"rows_per_sec":${best.inputRows / best.secs},""" +
+        s""""secs":${best.secs},""" +
+        s""""input_rows":${best.inputRows},"out_rows":${best.outRows},""" +
+        s""""state_rows":${best.stateRows},"rocksdb_engaged":$expectRocksDb}"""
     }
 
     val faceNames =
@@ -260,13 +248,13 @@ object StreamBench {
     def facesAt(topic: String, rows: Long, passes: Int): String =
       faceNames.map { face =>
         // RocksDB (still set from the e2e section) first, then the
-        // default provider restored for the hdfs leg
+        // default provider for the hdfs leg
         val rocks = runFaceProvider(face, "rocksdb_changelog",
           expectRocksDb = true, topic, rows, passes)
-        spark.conf.set(ProviderConf, defaultProvider)
-        val hdfs = runFaceProvider(face, "hdfs_default",
-          expectRocksDb = false, topic, rows, passes)
-        spark.conf.set(ProviderConf, GraftConf.clusterDefaults(ProviderConf))
+        val hdfs = Meters.withConfs(spark, Seq(ProviderConf -> defaultProvider)) {
+          runFaceProvider(face, "hdfs_default",
+            expectRocksDb = false, topic, rows, passes)
+        }
         s""""$face":{$hdfs,$rocks}"""
       }.mkString("{", ",", "}")
 
@@ -304,7 +292,7 @@ object StreamBench {
         //    maintenance (each put must know whether the key existed
         //    -> an extra get when tracking); state_rows then reads 0
         //    by design — the closed-form out_rows==rows/4 assertion
-        //    inside runFaceOnce still gates correctness;
+        //    inside runFaceProvider still gates correctness;
         //  - snapshot_checkpoint: changelog OFF — uploads SST
         //    snapshots instead of shipping per-batch deltas
         //    (isolates how much the changelog write path costs).
@@ -317,16 +305,13 @@ object StreamBench {
           "no_row_tracking" -> Map(
             "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows" -> "false"),
           "snapshot_checkpoint" -> Map(ChangelogConf -> "false"))
+        // withConfs restores even when a face throws, so tuned confs
+        // (256 MB write buffers, changelog off) never leak into later
+        // legs of the same run (ADVICE r14)
         val frags = variants.map { case (tag, confs) =>
-          val prior = confs.keys.map(k => k -> spark.conf.getOption(k)).toMap
-          confs.foreach { case (k, v) => spark.conf.set(k, v) }
-          // finally: a face that throws must not leak its tuned confs
-          // (256 MB write buffers, changelog off) into later legs of
-          // the same run (ADVICE r14)
-          try runFaceProvider("dedup_watermark", tag,
-            expectRocksDb = true, scaleTopic, nfScale, passes = 1)
-          finally prior.foreach { case (k, vOpt) =>
-            vOpt.fold(spark.conf.unset(k))(spark.conf.set(k, _))
+          Meters.withConfs(spark, confs) {
+            runFaceProvider("dedup_watermark", tag,
+              expectRocksDb = true, scaleTopic, nfScale, passes = 1)
           }
         }
         faces + s""","rocksdb_dedup_tuning":{${frags.mkString(",")}}"""

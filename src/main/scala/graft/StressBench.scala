@@ -7,6 +7,7 @@ import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
 import graft.operators.{Catalog, Curation, Dedup, EventAnalytics, Similarity, TextAnalysis}
+import Meters.{r3, time}
 
 /** 100×-readiness stress harness as a DRIVER-RUNNABLE artifact: the
   * synthesized hostile corpora that previously lived as prose in
@@ -29,15 +30,6 @@ import graft.operators.{Catalog, Curation, Dedup, EventAnalytics, Similarity, Te
   * iteration; the default runs every registered stress.
   */
 object StressBench {
-
-  private def time[T](f: => T): (T, Double) = {
-    val t0 = System.nanoTime()
-    val r = f
-    (r, (System.nanoTime() - t0) / 1e9)
-  }
-
-  private def r3(v: Double): String =
-    "%.3f".formatLocal(java.util.Locale.ROOT, v)
 
   /** `copies` offset clones of `df` (doc_id + k·offset), preserving
     * every other column — the pathological-duplication corpus builder
@@ -203,64 +195,12 @@ object StressBench {
       expr(s"transform(sequence(0, ${dim - 1}), j -> " +
         "cast(CASE WHEN j = id THEN 1.0 ELSE 0.0 END as float))").as("cv"))
 
-    val demoConfs = Map(
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
-      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "131072",
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "65536",
-      "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2.0")
-    val saved = (demoConfs.keys ++
-      Seq("spark.sql.adaptive.skewJoin.enabled")).map { k =>
-      k -> s.conf.getOption(k)
-    }.toMap
-
-    def run(skewOn: Boolean): (Long, Double, Boolean) = {
-      demoConfs.foreach { case (k, v) => s.conf.set(k, v) }
-      s.conf.set("spark.sql.adaptive.skewJoin.enabled", skewOn.toString)
-      val plans = ArrayBuffer.empty[String]
-      val listener = new QueryExecutionListener {
-        override def onSuccess(funcName: String, qe: QueryExecution,
-                               durationNs: Long): Unit =
-          plans.synchronized { plans += qe.executedPlan.toString }
-        override def onFailure(funcName: String, qe: QueryExecution,
-                               exception: Exception): Unit = ()
+    val ((pairsOff, secsOff, skewOff), (pairsOn, secsOn, skewOn)) =
+      skewProbe(s) {
+        val df = Similarity.semDedupPairs(emb, "vec_id", "embedding",
+          cents, "cent_id", "cv", t = 0.8)
+        val c = df.count(); df.unpersist(blocking = false); c
       }
-      s.listenerManager.register(listener)
-      try {
-        val (pairs, secs) = time {
-          val df = Similarity.semDedupPairs(emb, "vec_id", "embedding",
-            cents, "cent_id", "cv", t = 0.8)
-          val c = df.count(); df.unpersist(blocking = false); c
-        }
-        // listener events are posted asynchronously, and the operator
-        // runs SEVERAL actions (internal materialize counts + the final
-        // count) — waiting for "any plan with a Join" could read the
-        // buffer before the skewed join's plan lands and flakily report
-        // skew_split_seen_on=false. Wait until the event stream
-        // quiesces (no new plan for 500 ms), or the skew marker itself
-        // shows up when we expect one, bounded by a 10 s deadline.
-        val deadline = System.currentTimeMillis + 10000
-        var last = -1
-        var stableTicks = 0
-        while (System.currentTimeMillis < deadline && stableTicks < 5 &&
-          !(skewOn && plans.synchronized(plans.exists(_.contains("skew=true"))))) {
-          val c = plans.synchronized(plans.length)
-          if (c == last && c > 0) stableTicks += 1
-          else { stableTicks = 0; last = c }
-          Thread.sleep(100)
-        }
-        val sawSkew =
-          plans.synchronized { plans.exists(_.contains("skew=true")) }
-        (pairs, secs, sawSkew)
-      } finally {
-        s.listenerManager.unregister(listener)
-        saved.foreach { case (k, vOpt) =>
-          vOpt.fold(s.conf.unset(k))(v => s.conf.set(k, v))
-        }
-      }
-    }
-
-    val (pairsOff, secsOff, skewOff) = run(skewOn = false)
-    val (pairsOn, secsOn, skewOn) = run(skewOn = true)
     val ok = pairsOn == pairsOff && skewOn && !skewOff
     s""""semdedup_skew_aqe":{"vectors":$nVecs,"hot_fraction":0.9,""" +
       s""""secs_skew_off":${r3(secsOff)},"secs_skew_on":${r3(secsOn)},""" +
@@ -483,7 +423,12 @@ object StressBench {
     // output-proportional, constant ~1); c = 4 keeps the face heavy
     // enough to show core scaling without dominating the suite.
     val copies = 4
+    // the closed form counts every vector as a cos = 1 duplicate of its
+    // clones; a null or zero-norm embedding has no cosine, so it is
+    // dropped before n is counted and the corpus cloned (dotProduct is
+    // null on a null array or element, so `> 0` drops those too)
     val emb = Tables.embeddings(s, sfDir).select("vec_id", "embedding")
+      .filter(graft.functions.dotProduct(col("embedding"), col("embedding")) > 0)
     val n = emb.count()
     val offset = emb.agg(max("vec_id")).head().getLong(0) + 1
     val corpus = emb.withColumnRenamed("vec_id", "doc_id")
@@ -520,7 +465,10 @@ object StressBench {
     def lmStats(in: DataFrame): (Long, Long, Long) = {
       val chunked = Curation.chunkDocsToks(in, "doc_id", "text",
           chunkTokens = 64, strideTokens = 48)
-        .withColumn("ckey", col("doc_id") * 1000 + col("chunk_idx"))
+        .withColumn("ckey",
+          when(assert_true(col("chunk_idx") < 1000,
+              lit("lm_chunks_clone10x ckey packing assumes < 1000 chunks per doc")).isNull,
+            col("doc_id") * 1000 + col("chunk_idx")))
       val lm = TextAnalysis.unigramLogProbPreTokenized(chunked, "ckey",
         "chunk_toks")
       val cnt = lm.count()
@@ -764,7 +712,7 @@ object StressBench {
       s""""heavy_missed":${hm1 + hm10},"ok":$ok}"""
   }
 
-  /** Two-run AQE skew probe shared by the fact×fact skew faces:
+  /** Two-run AQE skew probe shared by every *_skew_aqe face:
     * executes `action` with AQE skew-join OFF then ON under the
     * demo-scale skew thresholds of the semdedup_skew_aqe precedent,
     * broadcast disabled (at 100 TB neither side of these joins
@@ -780,14 +728,9 @@ object StressBench {
       "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "131072",
       "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "65536",
       "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2.0")
-    val saved = (demoConfs.keys ++
-      Seq("spark.sql.adaptive.skewJoin.enabled")).map { k =>
-      k -> s.conf.getOption(k)
-    }.toMap
 
-    def run(skewOn: Boolean): (T, Double, Boolean) = {
-      demoConfs.foreach { case (k, v) => s.conf.set(k, v) }
-      s.conf.set("spark.sql.adaptive.skewJoin.enabled", skewOn.toString)
+    def run(skewOn: Boolean): (T, Double, Boolean) = Meters.withConfs(s,
+        demoConfs + ("spark.sql.adaptive.skewJoin.enabled" -> skewOn.toString)) {
       val plans = ArrayBuffer.empty[String]
       val listener = new QueryExecutionListener {
         override def onSuccess(funcName: String, qe: QueryExecution,
@@ -799,9 +742,12 @@ object StressBench {
       s.listenerManager.register(listener)
       try {
         val (result, secs) = time(action)
-        // listener events post asynchronously after the action
-        // returns; wait for the stream to settle (or the expected
-        // skew marker to land), bounded at 10 s
+        // listener events post asynchronously, and the action may run
+        // SEVERAL queries (semDedupPairs' internal materialize counts
+        // + its final count) — waiting for "any plan with a Join"
+        // could read the buffer before the skewed join's plan lands.
+        // Wait until no new plan arrives for 500 ms (or the expected
+        // skew marker lands), bounded at 10 s.
         val deadline = System.currentTimeMillis + 10000
         var last = -1
         var stableTicks = 0
@@ -819,12 +765,7 @@ object StressBench {
           plans.synchronized(plans.foreach(p =>
             System.err.println(s"[stress-debug] captured plan:\n$p")))
         (result, secs, sawSkew)
-      } finally {
-        s.listenerManager.unregister(listener)
-        saved.foreach { case (k, vOpt) =>
-          vOpt.fold(s.conf.unset(k))(v => s.conf.set(k, v))
-        }
-      }
+      } finally s.listenerManager.unregister(listener)
     }
 
     (run(skewOn = false), run(skewOn = true))
@@ -1433,8 +1374,7 @@ object StressBench {
       case None => all
     }
 
-    val t0 = System.nanoTime()
-    val fragments = selected.map { case (name, f) =>
+    val (fragments, total) = time(selected.map { case (name, f) =>
       val frag =
         try f()
         catch { case e: Throwable =>
@@ -1445,8 +1385,7 @@ object StressBench {
       spark.sqlContext.clearCache()
       System.gc()
       frag
-    }
-    val total = (System.nanoTime() - t0) / 1e9
+    })
     val line =
       s"""{"metric":"stress_total","value":${r3(total)},"unit":"sec",""" +
         s""""sf":"$sfDir","cpus":$cpus,""" +

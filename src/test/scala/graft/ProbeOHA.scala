@@ -91,24 +91,8 @@ object ProbeOHA {
             .OBJECT_AGG_SORT_BASED_FALLBACK_THRESHOLD).toString))
 
     def timeIt(name: String, conf: Map[String, String])(f: () => DataFrame)
-        : Double = {
-      val saved = conf.keys.map(k => k -> spark.conf.getOption(k)).toMap
-      conf.foreach { case (k, v) => spark.conf.set(k, v) }
-      try {
-        val runs = (1 to passes).map { _ =>
-          spark.catalog.clearCache()
-          System.gc()
-          val t0 = System.nanoTime()
-          f().write.format("noop").mode("overwrite").save()
-          (System.nanoTime() - t0) / 1e9
-        }
-        println(f"[probeoha] $name min=${runs.min}%.3f " +
-          f"all=${runs.map(r => f"$r%.2f").mkString(",")}")
-        runs.min
-      } finally saved.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None) => spark.conf.unset(k)
-      }
+        : Unit = Meters.withConfs(spark, conf) {
+      println(s"[probeoha] $name ${Meters.minAll(Meters.timeNoop(spark, passes)(f()))}")
     }
 
     // the builtin-decimal (pre-r15) twins of the five sites — same

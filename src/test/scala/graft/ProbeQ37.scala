@@ -18,16 +18,8 @@ object ProbeQ37 {
     val spark = GraftConf.localSession(32)
     spark.sparkContext.setLogLevel("ERROR")
 
-    def stage(name: String)(f: () => DataFrame): Unit = {
-      val runs = (1 to passes).map { _ =>
-        spark.catalog.clearCache()
-        System.gc()
-        val t0 = System.nanoTime()
-        f().write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }
-      println(f"[probe] $name min=${runs.min}%.3f all=${runs.map(r => f"$r%.2f").mkString(",")}")
-    }
+    def stage(name: String)(f: () => DataFrame): Unit =
+      println(s"[probe] $name ${Meters.minAll(Meters.timeNoop(spark, passes)(f()))}")
 
     val t = 0.4
     val emb = Tables.embeddings(spark, dir)
@@ -48,8 +40,9 @@ object ProbeQ37 {
       Similarity.cosineNearDup(emb, "vec_id", "embedding", t,
         tables = 16, multiProbe = true))
 
-    // recall/volume grid: exact baseline once, then each dial
-    val exact = exactSampled().persist()
+    // recall/volume grid: exact baseline once, then each dial. A local
+    // checkpoint, not a cache entry: the timed passes clear the cache.
+    val exact = exactSampled().localCheckpoint()
     val nExact = exact.count()
     println(s"[probe] exact sampled pairs: $nExact  corpus: ${e.count()}")
     for ((tb, pl, mp) <- Seq((16, 6, true), (12, 6, true), (8, 6, true),
@@ -61,20 +54,13 @@ object ProbeQ37 {
       val nApprox = approx.count()
       val hits = exact.join(approx, Seq("id_a", "id_b"), "left_semi").count()
       val recall = if (nExact == 0) 1.0 else hits.toDouble / nExact
-      // wall for this dial
-      val runs = (1 to passes).map { _ =>
-        val t0 = System.nanoTime()
-        Similarity.cosineNearDup(emb, "vec_id", "embedding", t,
-            tables = tb, planesPerTable = pl, multiProbe = mp)
-          .write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }
-      println(f"[probe] dial tables=$tb planes=$pl mp=$mp recall=$recall%.4f " +
-        f"($hits/$nExact) pairs=$nApprox wall_min=${runs.min}%.3f " +
-        f"all=${runs.map(r => f"$r%.2f").mkString(",")}")
       approx.unpersist()
+      val runs = Meters.timeNoop(spark, passes)(
+        Similarity.cosineNearDup(emb, "vec_id", "embedding", t,
+          tables = tb, planesPerTable = pl, multiProbe = mp))
+      println(f"[probe] dial tables=$tb planes=$pl mp=$mp recall=$recall%.4f " +
+        f"($hits/$nExact) pairs=$nApprox wall_${Meters.minAll(runs)}")
     }
-    exact.unpersist()
     spark.stop()
   }
 }

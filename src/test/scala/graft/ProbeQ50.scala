@@ -17,16 +17,8 @@ object ProbeQ50 {
     val spark = GraftConf.localSession(32)
     spark.sparkContext.setLogLevel("ERROR")
 
-    def stage(name: String)(f: () => DataFrame): Unit = {
-      val runs = (1 to passes).map { _ =>
-        spark.catalog.clearCache()
-        System.gc()
-        val t0 = System.nanoTime()
-        f().write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }
-      println(f"[probe] $name min=${runs.min}%.3f all=${runs.map(r => f"$r%.2f").mkString(",")}")
-    }
+    def stage(name: String)(f: () => DataFrame): Unit =
+      println(s"[probe] $name ${Meters.minAll(Meters.timeNoop(spark, passes)(f()))}")
 
     val s = spark
 

@@ -167,8 +167,18 @@ def main():
               "with N).")
         k = min(pa, pb)
         if da and db:
+            # cut every per-pass series to the first k passes, so the
+            # notes annotate() writes cite only passes the matched
+            # minimum could have picked
+            def first_k(d):
+                return {f: v[:k] if isinstance(v, list) else v
+                        for f, v in d.items()}
+            da = {q: first_k(d) for q, d in da.items()}
+            db = {q: first_k(d) for q, d in db.items()}
+            steal_a, steal_b = steal_a[:k], steal_b[:k]
+
             def matched_min(d):
-                ps = [p for p in d.get("passes", [])[:k]
+                ps = [p for p in d.get("passes", [])
                       if p is not None and p >= 0]
                 return min(ps) if ps else None
             qa = {q: matched_min(d) for q, d in da.items()}
