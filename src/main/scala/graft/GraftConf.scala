@@ -92,6 +92,17 @@ object GraftConf {
     // metadata — noise against executor memory, and strictly
     // driver/executor-local.
     "spark.sql.codegen.cache.maxEntries" -> "16384",
+    // ---- codegen class reuse across streaming queries: the class cache
+    // above is keyed by (context classloader, source), and every
+    // writeStream.start() runs in a cloned session. With artifact
+    // isolation on (Spark's default) each clone gets a fresh artifact
+    // classloader, so every query start misses on byte-identical
+    // sources: a perfbench trade_stream drain recompiled 25 classes
+    // (~300 ms) per start, darkpool_dedup_stream 12 (~120 ms), at
+    // local[2] on a 4-vCPU host. This library adds no per-session jars
+    // or REPL classes, so isolation buys nothing; with it off, every
+    // drain after the first compiles nothing.
+    "spark.sql.artifact.isolation.enabled" -> "false",
     // ---- session determinism: every timestamp operator in this repo
     // is defined in UTC; a session in any other zone would silently
     // shift day buckets (Telemetry dt handshake, timeBucket)
@@ -110,15 +121,18 @@ object GraftConf {
     "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
     "spark.sql.autoBroadcastJoinThreshold",
     "spark.sql.codegen.cache.maxEntries",
+    "spark.sql.artifact.isolation.enabled",
     "spark.sql.session.timeZone")
 
   /** Keys that are STATIC (builder-time only) — re-`conf.set` on a
-    * live session throws for these; they take effect only when this
-    * process created the session (true for the harness mains, each
-    * the first session in its JVM).
+    * live session throws for the first two and is ignored for artifact
+    * isolation; they take effect only when this process created the
+    * session (true for the harness mains, each the first session in
+    * its JVM).
     */
   private val staticKeys: Set[String] =
-    Set("spark.ui.enabled", "spark.sql.codegen.cache.maxEntries")
+    Set("spark.ui.enabled", "spark.sql.codegen.cache.maxEntries",
+      "spark.sql.artifact.isolation.enabled")
 
   /** The exact config map a local harness session applies: shuffle
     * partitions = cpus (not the 200 default, not the cluster 2000),

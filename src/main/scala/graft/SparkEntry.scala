@@ -1219,13 +1219,12 @@ object SparkEntry {
         StructField("event_type", StringType),
         StructField("value", DoubleType),
         StructField("channel", StringType))) // absent in the data
-      // Materialize the parsed (bronze→silver) table before the
-      // quarantine filter + sort: without the cut, PushDownPredicates
-      // inlines the WHOLE from_json into the corrupt-record Filter
-      // (one extra parse per row) and the range-sort's sampling pass
-      // re-parses everything again — measured 2.8 s → 1.1 s at sf0.1.
-      // At scale this cut is the ingestion layer's real parsed-table
-      // write; see Ingest.parseJson's scaladoc.
+      // Materialize the parsed (bronze→silver) table before the sort:
+      // parseJson parses each payload once even under the quarantine
+      // filter, but without the cut the range-sort's sampling pass
+      // re-runs the whole parse. At scale this cut is the ingestion
+      // layer's real parsed-table write; see Ingest.parseJson's
+      // scaladoc.
       val parsed = sources.Ingest.parseJson(poisoned, "raw", schema)
         .localCheckpoint()
       sources.Ingest.valid(parsed)
@@ -1335,8 +1334,8 @@ object SparkEntry {
         concat(lit("title-"), col("event_id")).as("title"),
         lit("u").as("article_url"),
         lit("d").as("description"))).as("raw"))
-      // same bronze→silver cut as q26: stop the corrupt-record filter
-      // and the sort-sampling pass from re-running the nested parse
+      // same bronze→silver cut as q26: stop the sort-sampling pass
+      // from re-running the nested parse
       val parsed = sources.Ingest.valid(
         sources.Ingest.parseJson(json, "raw", sources.Schemas.newsArticle)
           .localCheckpoint())

@@ -36,11 +36,12 @@ import graft.streaming.StreamingOps
   */
 object StreamBench {
   /** What one drain reports: input rows, wall seconds, non-empty
-    * micro-batches, peak state-store rows, output rows.
+    * micro-batches, peak state-store rows, output rows, and the
+    * Janino classes compiled while it ran.
     */
   private final case class Drain(inputRows: Long, secs: Double,
                                  batches: Int, stateRows: Long,
-                                 outRows: Long)
+                                 outRows: Long, compiles: Long)
 
   private val ProviderConf = "spark.sql.streaming.stateStore.providerClass"
   private val ChangelogConf =
@@ -90,6 +91,7 @@ object StreamBench {
     def drain(tag: String, expectRocksDb: Boolean, topic: String,
               schema: String)(build: DataFrame => DataFrame): Drain = {
       val out = s"$dir/out_$tag"; val ckpt = s"$dir/ckpt_$tag"
+      val compiles0 = Meters.codegenCompiles()
       val ((q, outSchema), secs) = Meters.time {
         val outDf = build(spark.readStream.schema(schema)
           .option("maxFilesPerTrigger", "2").parquet(topic))
@@ -98,6 +100,7 @@ object StreamBench {
         q.awaitTermination()
         (q, outDf.schema)
       }
+      val compiles = Meters.codegenCompiles() - compiles0
       val progress = q.recentProgress
       val ops = progress.flatMap(_.stateOperators)
       val rocksDbMetrics = ops
@@ -109,23 +112,23 @@ object StreamBench {
       Drain(progress.map(_.numInputRows).sum, secs,
         progress.count(_.numInputRows > 0),
         ops.map(_.numRowsTotal).foldLeft(0L)(math.max),
-        spark.read.schema(outSchema).parquet(out).count())
+        spark.read.schema(outSchema).parquet(out).count(), compiles)
     }
 
     /** Min-of-`passes` drains, matching Bench's convention: whichever
       * provider runs second in this JVM would otherwise inherit warmed
       * JIT/codegen/file-cache state from the first and the side-by-side
       * comparison would be systematically biased toward it. Returns
-      * the best (min-secs) drain and every pass's seconds.
+      * the best (min-secs) drain and every pass.
       */
-    def bestOf(passes: Int)(run: Int => Drain): (Drain, Seq[Double]) = {
+    def bestOf(passes: Int)(run: Int => Drain): (Drain, Seq[Drain]) = {
       val runs = (1 to passes).map(run)
-      (runs.minBy(_.secs), runs.map(_.secs))
+      (runs.minBy(_.secs), runs)
     }
 
     def runProvider(tag: String,
                     expectRocksDb: Boolean): (String, Double) = {
-      val (best, secs) = bestOf(2)(i =>
+      val (best, runs) = bestOf(2)(i =>
         drain(s"${tag}_p$i", expectRocksDb, topic,
             "key string, value string, ts timestamp") { raw =>
           val parsed = Ingest.valid(Ingest.parseJson(
@@ -140,7 +143,9 @@ object StreamBench {
         })
       val rps = best.inputRows / best.secs
       (s""""$tag":{"rows_per_sec":$rps,"secs":${best.secs},""" +
-        s""""secs_pass1":${secs(0)},"secs_pass2":${secs(1)},""" +
+        s""""secs_pass1":${runs(0).secs},"secs_pass2":${runs(1).secs},""" +
+        s""""codegen_compiles_pass1":${runs(0).compiles},""" +
+        s""""codegen_compiles_pass2":${runs(1).compiles},""" +
         s""""input_rows":${best.inputRows},"batches":${best.batches},""" +
         s""""out_windows":${best.outRows},"rocksdb_engaged":$expectRocksDb}""",
         rps)

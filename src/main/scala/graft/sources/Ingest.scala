@@ -21,22 +21,26 @@ object Ingest {
     * (ref option_trades/utils.py:205-208; SURVEY.md §2.10 error
     * handling). Returns all rows; use [[valid]]/[[corrupt]] to split.
     *
-    * PERFORMANCE: the result is lazy, and Catalyst's PushDownPredicates
-    * will inline the whole `from_json` into any filter a caller puts on
-    * top (the [[valid]] quarantine filter included) — the JSON then
-    * parses once in the Filter and again in the projection, and a
-    * global sort's range-sampling pass doubles both. Callers that
-    * filter-and-consume should cut the plan at the parse boundary
-    * (`.localCheckpoint()` locally; at scale, the parsed-table write
-    * that an ingestion bronze→silver layer does anyway) — measured
-    * 2.6× on the q26 ingest query at sf0.1.
+    * Columns: `df`'s, then `schema`'s fields, then [[CorruptCol]]. A
+    * null or empty payload yields an all-null row with a null
+    * [[CorruptCol]], so it counts as valid.
+    *
+    * PERFORMANCE: the parse is the output of a one-row `inline_outer`
+    * Generate, so each payload parses once per evaluation of the plan.
+    * PushDownPredicates would inline a projected `from_json` into any
+    * filter on top (the [[valid]]/[[corrupt]] split included) and
+    * parse every payload twice; it cannot push a filter through a
+    * Generate onto the Generate's output. A global sort's
+    * range-sampling pass still evaluates the plan twice, so batch
+    * callers that sort the parsed rows should cut the plan at the
+    * parse boundary (`.localCheckpoint()` locally; at scale, the
+    * parsed-table write a bronze→silver layer does anyway).
     */
   def parseJson(df: DataFrame, jsonCol: String, schema: StructType): DataFrame = {
     val withCorrupt = schema.add(CorruptCol, org.apache.spark.sql.types.StringType)
-    df.withColumn("__parsed",
-        from_json(col(jsonCol), withCorrupt,
-          Map("mode" -> "PERMISSIVE", "columnNameOfCorruptRecord" -> CorruptCol)))
-      .select(col("*"), col("__parsed.*")).drop("__parsed")
+    df.select(col("*"), inline_outer(array(
+      from_json(col(jsonCol), withCorrupt,
+        Map("mode" -> "PERMISSIVE", "columnNameOfCorruptRecord" -> CorruptCol)))))
   }
 
   /** Rows that parsed cleanly (F3 schema-validator filter,

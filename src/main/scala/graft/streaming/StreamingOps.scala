@@ -61,6 +61,7 @@ object StreamingOps {
   def windowedAgg(df: DataFrame, tsCol: String, keyCol: String,
                   windowSize: String, grace: String,
                   aggs: Seq[Column]): DataFrame = {
+    require(aggs.nonEmpty, "windowedAgg needs at least one aggregate column")
     val agged = df.withWatermark(tsCol, grace)
       .groupBy(window(col(tsCol), windowSize), col(keyCol))
       .agg(aggs.head, aggs.tail: _*)
@@ -77,6 +78,7 @@ object StreamingOps {
   def windowedAggSliding(df: DataFrame, tsCol: String, keyCol: String,
                          windowSize: String, slide: String, grace: String,
                          aggs: Seq[Column]): DataFrame = {
+    require(aggs.nonEmpty, "windowedAggSliding needs at least one aggregate column")
     val agged = df.withWatermark(tsCol, grace)
       .groupBy(window(col(tsCol), windowSize, slide), col(keyCol))
       .agg(aggs.head, aggs.tail: _*)
@@ -91,6 +93,7 @@ object StreamingOps {
     */
   def sessionAgg(df: DataFrame, tsCol: String, keyCol: String,
                  gap: String, grace: String, aggs: Seq[Column]): DataFrame = {
+    require(aggs.nonEmpty, "sessionAgg needs at least one aggregate column")
     val agged = df.withWatermark(tsCol, grace)
       .groupBy(session_window(col(tsCol), gap), col(keyCol))
       .agg(aggs.head, aggs.tail: _*)

@@ -30,6 +30,42 @@ class IngestSpec extends SparkSpec {
     tsla.getAs[Double]("close") shouldBe 2.5
   }
 
+  test("parseJson parses each payload once under the valid/corrupt split; null, empty and truncated payloads keep their split") {
+    val schema = StructType(Seq(StructField("a", LongType), StructField("b", StringType)))
+    // read back from parquet: over an in-memory LocalRelation the
+    // optimizer would run the whole parse at planning time
+    val src = java.nio.file.Files.createTempDirectory("parse_once").toString + "/raw"
+    Seq[(Int, String)](
+      (1, """{"a":1,"b":"x"}"""),
+      (2, null),
+      (3, ""),
+      (4, """{"a":2,"b":""")            // truncated mid-value
+    ).toDF("id", "raw").write.parquet(src)
+    val raw = spark.read.parquet(src)
+    val parsed = Ingest.parseJson(raw, "raw", schema)
+    // a filter on the parsed columns must not re-inline the parse: one
+    // JsonToStructs per optimized plan, not one in the Filter and one
+    // in the Project
+    def parses(df: org.apache.spark.sql.DataFrame): Int =
+      df.queryExecution.optimizedPlan.collect { case p =>
+        p.expressions.map(_.collect {
+          case j: org.apache.spark.sql.catalyst.expressions.JsonToStructs => j
+        }.size).sum
+      }.sum
+    parses(Ingest.valid(parsed)) shouldBe 1
+    parses(Ingest.corrupt(parsed)) shouldBe 1
+    // input columns, then schema fields, then the corrupt column
+    parsed.columns.toSeq shouldBe Seq("id", "raw", "a", "b", Ingest.CorruptCol)
+    // null and empty payloads are valid all-null rows; only the
+    // truncated payload is quarantined, with its raw text
+    rowsOf(Ingest.valid(parsed).orderBy($"id")) shouldBe Seq(
+      Seq(1, """{"a":1,"b":"x"}""", 1L, "x"),
+      Seq(2, null, null, null),
+      Seq(3, "", null, null))
+    rowsOf(Ingest.corrupt(parsed).select($"id", col(Ingest.CorruptCol))) shouldBe
+      Seq(Seq(4, """{"a":2,"b":"""))
+  }
+
   test("mapFields: vendor fields rename + string-numeric casts with '0' defaults (P1, ref utils.py:111-145)") {
     val vendorJson = Seq(
       """{"id":"t-1","executed_at":1704110460500,"option_symbol":"AAPL240118C00100000",

@@ -342,6 +342,11 @@ class ScaleSpec extends SparkSpec {
     c("spark.sql.codegen.cache.maxEntries").toInt should be >= 1024
     l("spark.sql.codegen.cache.maxEntries") shouldBe
       c("spark.sql.codegen.cache.maxEntries")
+    // that cache is keyed by classloader: with artifact isolation on,
+    // every streaming query start clones a session with a fresh
+    // classloader and recompiles every stage. Both tiers turn it off.
+    c("spark.sql.artifact.isolation.enabled") shouldBe "false"
+    l("spark.sql.artifact.isolation.enabled") shouldBe "false"
     // cluster-width and scan-size knobs must NOT leak into local runs
     l.get("spark.sql.files.maxPartitionBytes") shouldBe None
     l("spark.sql.shuffle.partitions") should not be

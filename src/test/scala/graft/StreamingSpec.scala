@@ -832,6 +832,88 @@ class StreamingSpec extends SparkSpec {
     spark.read.parquet(out).count() shouldBe 4
   }
 
+  test("restart from checkpoint: the 24-measure windowedAgg → parquet pipeline stopped halfway and resumed equals an uninterrupted run") {
+    import org.apache.spark.sql.types._
+    import java.nio.file.{Path, StandardCopyOption}
+    import java.nio.file.attribute.FileTime
+    import graft.operators.OptionAgg
+    import graft.sources.Ingest
+
+    // six topic files, file i holding minute i of event time for three
+    // symbols; a 30 s grace closes minute i-1 once file i is read, so
+    // every drain emits windows and nothing arrives late
+    val dir = Files.createTempDirectory("restart_ckpt")
+    val baseUs = 1704103200000000L // 2024-01-01 10:00:00 UTC
+    val files: Seq[Path] = (0 until 6).map { i =>
+      val stage = s"$dir/stage_$i"
+      val trades = spark.range(24).select(
+        timestamp_micros(lit(baseUs + i * 60000000L) +
+          (col("id") / 3).cast("long") * 6000000L + 5000000L).as("ts"),
+        concat(lit("SYM"), (col("id") % 3).cast("string")).as("osym"),
+        element_at(array(lit("buy"), lit("sell"), lit("no_side")),
+          (col("id") % 3 + 1).cast("int")).as("side"),
+        element_at(array(lit("call"), lit("put")),
+          (col("id") % 2 + 1).cast("int")).as("otype"),
+        (col("id") + i + 1).as("qty"),
+        ((col("id") * 37 + i) * 5000).cast("double").as("premium"))
+      Ingest.toProducerRecords(trades, "osym", "ts").coalesce(1)
+        .write.parquet(stage)
+      new java.io.File(stage).listFiles()
+        .find(_.getName.endsWith(".parquet")).get.toPath
+    }
+    // the file source reads in modification-time order: stamp the
+    // files strictly increasing so both runs see the same batches
+    val t0 = System.currentTimeMillis() - 3600000L
+    def publish(topic: String, idx: Seq[Int]): Unit = idx.foreach { i =>
+      val dst = java.nio.file.Paths.get(topic, f"f$i%02d.parquet")
+      Files.createDirectories(dst.getParent)
+      Files.copy(files(i), dst, StandardCopyOption.REPLACE_EXISTING)
+      Files.setLastModifiedTime(dst, FileTime.fromMillis(t0 + i * 1000L))
+    }
+
+    val valueSchema = StructType(Seq(
+      StructField("ts", TimestampType), StructField("osym", StringType),
+      StructField("side", StringType), StructField("otype", StringType),
+      StructField("qty", LongType), StructField("premium", DoubleType)))
+    def drain(topic: String, out: String, ckpt: String): Unit = {
+      val raw = spark.readStream
+        .schema("key string, value string, ts timestamp")
+        .option("maxFilesPerTrigger", "1")
+        .parquet(topic)
+        .withColumnRenamed("ts", "kafka_ts")
+      val parsed = Ingest.valid(Ingest.parseJson(raw, "value", valueSchema))
+        .select("ts", "osym", "side", "otype", "qty", "premium")
+      val agged = StreamingOps.windowedAgg(parsed, "ts", "osym",
+        "1 minute", "30 seconds",
+        count(lit(1)).as("count") +: OptionAgg.measures())
+      StreamingOps.sink(agged, "parquet", Some(out), ckpt,
+        trigger = Trigger.AvailableNow()).start().awaitTermination()
+    }
+    def windows(out: String): Seq[Seq[Any]] =
+      rowsOf(spark.read.parquet(out).orderBy($"window_start", $"osym"))
+
+    // uninterrupted: all six files, one checkpoint
+    publish(s"$dir/topic_full", 0 until 6)
+    drain(s"$dir/topic_full", s"$dir/out_full", s"$dir/ckpt_full")
+    val full = windows(s"$dir/out_full")
+    full.length shouldBe 15 // minutes 0-4 closed × 3 symbols; minute 5 open
+
+    // interrupted: first half, stop, the rest, restart on the same
+    // checkpoint
+    publish(s"$dir/topic_split", 0 until 3)
+    drain(s"$dir/topic_split", s"$dir/out_split", s"$dir/ckpt_split")
+    val firstHalf = windows(s"$dir/out_split")
+    firstHalf should not be empty
+    firstHalf.length should be < full.length
+    publish(s"$dir/topic_split", 3 until 6)
+    drain(s"$dir/topic_split", s"$dir/out_split", s"$dir/ckpt_split")
+    val resumed = windows(s"$dir/out_split")
+    // no window emitted twice, and the union of both drains is the
+    // uninterrupted output
+    resumed.map(r => (r(0), r(2))).distinct.length shouldBe resumed.length
+    resumed shouldBe full
+  }
+
   test("streaming curation: content-key dedup within watermark + quality floor, late duplicates stay dropped (q44 streaming twin)") {
     val input = MemoryStream[Doc](spark)
     val curated = StreamingOps.curateStream(input.toDF(), "ts", "10 seconds",
@@ -986,5 +1068,20 @@ class StreamingSpec extends SparkSpec {
       .orderBy($"session_start")
       .collect().map(r => (r.getAs[Double]("s"), r.getAs[Long]("n")))
     out.toSeq shouldBe Seq((3.0, 2L), (3.0, 1L))
+  }
+
+  test("windowedAgg, windowedAggSliding and sessionAgg reject an empty aggregate list by name") {
+    val df = Seq(Ev(ts("2024-01-01 10:00:00"), "a", 1.0)).toDF()
+    val calls: Seq[(String, () => Any)] = Seq(
+      "windowedAgg" -> (() => StreamingOps.windowedAgg(df, "ts", "key",
+        "1 minute", "1 second", Nil)),
+      "windowedAggSliding" -> (() => StreamingOps.windowedAggSliding(df, "ts",
+        "key", "1 minute", "30 seconds", "1 second", Nil)),
+      "sessionAgg" -> (() => StreamingOps.sessionAgg(df, "ts", "key",
+        "30 seconds", "1 second", Nil)))
+    calls.foreach { case (name, call) =>
+      val e = intercept[IllegalArgumentException](call())
+      e.getMessage should include(s"$name needs at least one aggregate column")
+    }
   }
 }
